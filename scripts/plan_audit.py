@@ -32,6 +32,39 @@ def headline(plan: str, max_ops: int = 40) -> str:
     return "\n".join(lines[:max_ops])
 
 
+PYTHON_UDF_NODES = ("MapInPandas", "FlatMapGroupsInPandas")
+
+
+def operator_tree(plan: str) -> list[tuple[int, str]]:
+    """(depth, operator name) for each line of the formatted plan's tree,
+    in pre-order; a node's subtree is the following lines of greater depth."""
+    out = []
+    for line in plan.split("\n\n")[0].splitlines()[1:]:
+        m = re.match(r"^([ :+|-]*)(?:\* )?(\w[\w ]*?)\s+\(\d+\)$", line)
+        if m:
+            out.append((len(m.group(1)), m.group(2)))
+    return out
+
+
+def exchange_above_python_udf(plan: str) -> bool:
+    """True if any Exchange has a Python UDF node in its subtree."""
+    tree = operator_tree(plan)
+    for i, (depth, name) in enumerate(tree):
+        if "Exchange" not in name:
+            continue
+        for sub_depth, sub_name in tree[i + 1 :]:
+            if sub_depth <= depth:
+                break
+            if sub_name in PYTHON_UDF_NODES:
+                return True
+    return False
+
+
+def range_exchanges(plan: str, column: str) -> int:
+    """Number of range-partitioning Exchanges on ``column``."""
+    return len(re.findall(rf"Arguments: rangepartitioning\({column}#", plan))
+
+
 def run_audit(
     spark, sf_dir: str = SF_DIR, write_md: bool = True
 ) -> list[str]:
@@ -213,6 +246,65 @@ def run_audit(
         "Base tier = one applyInPandas shuffle; day-aligned feature tiers "
         "decode + split payloads INSIDE the UDF — zero additional shuffle.",
     )
+
+    # 8. RollupEngine.run(): every tier frame it hands to the writer, for
+    # both base implementations.  The range layout sits on the input of
+    # each tier's Python UDF stage, so the UDF runs once per commit.
+    import shutil
+    import tempfile
+
+    from tsfresh_spark.operators.rollup import DAY, TierSpec
+
+    run_pts = pts.select(
+        F.col("user_id").alias("doc_id"),
+        F.col("event_type").alias("source"),
+        "ts",
+        "value",
+    )
+    for impl in ("windows", "compact"):
+        root = tempfile.mkdtemp(prefix="plan_audit_rollup_")
+        run_eng = RollupEngine(
+            spark,
+            root,
+            settings={"length": None, "mean": None},
+            base_step_seconds=3600,
+            base_impl=impl,
+            tiers=[TierSpec("1h", 3600), TierSpec("1d", DAY), TierSpec("7d", 7 * DAY)],
+        )
+        written = []
+        write = run_eng._write
+
+        def capture(df, tier, write=write, written=written):
+            written.append((tier, df))
+            return write(df, tier)
+
+        run_eng._write = capture
+        try:
+            run_eng.run(run_pts, job_id="plan-audit")
+            tiers = [t for t, _ in written]
+            if tiers != ["raw", "base", "1h", "1d", "7d"]:
+                failures.append(f"RollupEngine.run ({impl}): wrote {tiers}")
+            for tier, df in written:
+                audit(
+                    f"RollupEngine.run tier={tier} (base_impl={impl})",
+                    df,
+                    [
+                        (
+                            "exactly one range Exchange on doc_id (the stored layout)",
+                            lambda p: range_exchanges(p, "doc_id") == 1,
+                        ),
+                        (
+                            "no Exchange above a Python UDF node (the UDF runs once)",
+                            lambda p: not exchange_above_python_udf(p),
+                        ),
+                    ],
+                    "The frame `run()` hands to the tier writer.  Its range "
+                    "layout on doc_id is applied to the input of the Python UDF "
+                    "stage, so the range sampler reads the JVM-side input and "
+                    "never re-runs the UDF.",
+                )
+        finally:
+            shutil.rmtree(root, ignore_errors=True)
 
     if write_md:
         body = (

@@ -162,3 +162,48 @@ def test_kind_to_settings_routing(spark, tokens_df):
     code = out[out.source == "code"]
     assert set(web.variable.str.split("__").str[1]) == {"mean"}
     assert set(code.variable.str.split("__").str[1]) == {"maximum"}
+
+
+def test_no_per_series_state_survives_extraction():
+    """Every module-level one-slot kernel cache (``_*_CACHE = [None]``) is
+    empty once ``compute_series_features`` has finished a series, so a
+    reused python worker pins nothing of the last series between jobs."""
+    import importlib
+    import pkgutil
+
+    import tsfresh_spark.kernels as kernels_pkg
+    from tsfresh_spark.extract import compute_series_features
+
+    x = np.random.RandomState(3).normal(size=300)
+    out = dict(compute_series_features(x, "web", comprehensive_settings()))
+    assert out
+    slots = {}
+    for mod_info in pkgutil.iter_modules(kernels_pkg.__path__):
+        mod = importlib.import_module(f"{kernels_pkg.__name__}.{mod_info.name}")
+        for name, value in vars(mod).items():
+            if name.endswith("_CACHE") and isinstance(value, list) and len(value) == 1:
+                slots[f"{mod_info.name}.{name}"] = value[0]
+    # the four shared per-series slots: rfft, Welch PSD, Chebyshev, Friedrich
+    assert len(slots) >= 4, sorted(slots)
+    assert {k: v for k, v in slots.items() if v is not None} == {}
+
+
+def test_series_caches_key_on_dtype():
+    """Two series with the same bytes but different dtypes must not share
+    a cached rfft or Chebyshev matrix."""
+    from tsfresh_spark.kernels.entropy import _cheb_matrices, clear_cheb_cache
+    from tsfresh_spark.kernels.spectral import _rfft_cached, clear_rfft_cache
+
+    a = np.arange(1.0, 9.0)
+    b = a.view(np.int64)
+    try:
+        _rfft_cached(a)
+        np.testing.assert_array_equal(_rfft_cached(b), np.fft.rfft(b))
+        _cheb_matrices(a, [2])
+        got = _cheb_matrices(b, [2])[2]
+        want = np.abs(b[:, None] - b[None, :])
+        want = np.maximum(want[:-1, :-1], want[1:, 1:])
+        np.testing.assert_array_equal(got, want)
+    finally:
+        clear_cheb_cache()
+        clear_rfft_cache()

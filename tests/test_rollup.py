@@ -267,3 +267,90 @@ def test_tier_without_payload_matches_with_payload(spark, raw_points):
         a.drop(columns=["payload"]), b.drop(columns=["payload"]),
         check_exact=True,
     )
+
+
+def _tier_rows(spark, path):
+    """Every stored row of a tier with features as exact float bytes, so
+    NaN and -0.0 compare bit for bit."""
+    rows = []
+    for r in spark.read.parquet(path).collect():
+        feats = None if r.features is None else sorted(
+            (k, None if v is None else np.float64(v).tobytes())
+            for k, v in r.features.items()
+        )
+        payload = None if r.payload is None else bytes(r.payload)
+        rows.append((r.doc_id, r.source, r.window_start, r.n_points, feats, payload))
+    return sorted(rows, key=lambda row: row[:3])
+
+
+def test_crash_windows_resume_equals_clean_run(
+    spark, engine, raw_points, tmp_path_factory, monkeypatch
+):
+    """A job that dies after a tier's data write but before its COMMIT
+    record, or between two tier commits, resumes under the same job_id:
+    committed tiers are skipped, the uncommitted tier is recomputed, and
+    every tier ends byte-equal to a clean run."""
+    from tsfresh_spark.plans.manifest import Manifest
+
+    class Crash(RuntimeError):
+        pass
+
+    base = str(tmp_path_factory.mktemp("rollup_crash"))
+
+    def make():
+        return RollupEngine(
+            spark,
+            base,
+            settings=minimal_settings(),
+            base_step_seconds=60,
+            tiers=[TierSpec("1h", 3600), TierSpec("1d", DAY)],
+            range_partitions=4,
+        )
+
+    record = Manifest.record_tier
+    write = RollupEngine._write
+    written = []
+
+    def record_crashing_on_base(self, job_id, tier, *args):
+        if tier == "base":
+            raise Crash("before the base COMMIT")
+        return record(self, job_id, tier, *args)
+
+    def write_crashing_on_1d(self, df, tier):
+        if tier == "1d":
+            raise Crash("between the 1h and 1d commits")
+        written.append(tier)
+        return write(self, df, tier)
+
+    def write_spy(self, df, tier):
+        written.append(tier)
+        return write(self, df, tier)
+
+    # crash 1: the base tier's data is on storage, its COMMIT is not
+    with monkeypatch.context() as m:
+        m.setattr(Manifest, "record_tier", record_crashing_on_base)
+        with pytest.raises(Crash):
+            make().run(raw_points, job_id="job-crash")
+    assert make().manifest.committed_tiers("job-crash") == {"raw"}
+    assert os.path.isdir(make().tier_path("base"))
+
+    # crash 2: resume recomputes the uncommitted base, commits 1h, then dies
+    with monkeypatch.context() as m:
+        m.setattr(RollupEngine, "_write", write_crashing_on_1d)
+        with pytest.raises(Crash):
+            make().run(raw_points, job_id="job-crash")
+    assert written == ["base", "1h"]
+    assert make().manifest.committed_tiers("job-crash") == {"raw", "base", "1h"}
+
+    # the final resume writes only the one tier still uncommitted
+    written.clear()
+    with monkeypatch.context() as m:
+        m.setattr(RollupEngine, "_write", write_spy)
+        paths = make().run(raw_points, job_id="job-crash")
+    assert written == ["1d"]
+    assert make().manifest.committed_tiers("job-crash") == {"raw", "base", "1h", "1d"}
+
+    for tier in ["raw", "base", "1h", "1d"]:
+        assert _tier_rows(spark, paths[tier]) == _tier_rows(
+            spark, engine.paths[tier]
+        ), tier

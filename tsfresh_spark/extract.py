@@ -154,13 +154,16 @@ def compute_series_features(
         # ~66 MB per reused python worker between jobs.  The Welch-PSD
         # (fourier_entropy / spkt_welch_density) and rfft (fft_coefficient /
         # fft_aggregated) one-slot shares are cleared for the same reason
-        # (they pin the series bytes as their keys).
+        # (they pin the series bytes as their keys), and so is the Friedrich
+        # drift fit (friedrich_coefficients / max_langevin_fixed_point).
         from tsfresh_spark.kernels.entropy import clear_cheb_cache
         from tsfresh_spark.kernels.helpers import clear_psd_cache
+        from tsfresh_spark.kernels.model import clear_friedrich_cache
         from tsfresh_spark.kernels.spectral import clear_rfft_cache
 
         clear_cheb_cache()
         clear_psd_cache()
+        clear_friedrich_cache()
         clear_rfft_cache()
 
 

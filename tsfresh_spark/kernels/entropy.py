@@ -32,9 +32,10 @@ _CHEB_DENSE_LIMIT = 4096  # n beyond which the O(n²) dense matrices spill
 # approximate_entropy grid (m=2) build the IDENTICAL width-{2,3} matrices
 # for the same series back-to-back inside one extraction plan — the dense
 # matrix construction is ~73% of the comprehensive-set runtime, so sharing
-# it halves that cost.  Keyed by the raw series bytes (exact memcmp, no
-# hash collisions); bounded to the single most recent series per worker.
-_CHEB_CACHE: list = [None]  # (key_bytes, {width: matrix})
+# it halves that cost.  Keyed by the dtype and the raw series bytes (exact
+# memcmp, no hash collisions); bounded to the single most recent series per
+# worker.
+_CHEB_CACHE: list = [None]  # ((dtype_str, key_bytes), {width: matrix})
 
 
 def clear_cheb_cache() -> None:
@@ -49,7 +50,7 @@ def _cheb_matrices(x: np.ndarray, widths: list[int]):
     """Chebyshev window-distance matrices for each width, built as
     diagonal-shifted maxima of the single |x_i - x_j| base matrix — exact
     same values as the 3-D broadcast, ~m× less memory traffic."""
-    key = x.tobytes()
+    key = (x.dtype.str, x.tobytes())
     cached = _CHEB_CACHE[0]
     if cached is not None and cached[0] == key and all(
         w in cached[1] for w in widths

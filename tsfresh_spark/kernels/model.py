@@ -311,6 +311,12 @@ def augmented_dickey_fuller(x, param):
 _FRIEDRICH_CACHE: list = [None]  # (key_bytes, m, r, coeffs)
 
 
+def clear_friedrich_cache() -> None:
+    """Release the cached fit (and its series-bytes key) so reused python
+    workers don't pin the last series between jobs."""
+    _FRIEDRICH_CACHE[0] = None
+
+
 def _friedrich_coefficients_cached(x, m, r):
     xa = np.asarray(x, dtype=float)
     key = xa.tobytes()

@@ -15,10 +15,14 @@ Feature tiers read the BASE tier's compressed day-chunks, never the raw
 input: day-aligned windows split each payload inside a narrow ``mapInPandas``
 (zero shuffle); wider windows decode + regroup (one shuffle).  The codec is
 bit-exact, so "cascade" and "direct" produce identical features (asserted in
-tests).  Every tier write is range-laid-out
-(repartitionByRange on doc_id, sorted within partitions) and recorded in the
-manifest with per-file row/byte metrics and a COMMIT record; a re-run of the
-same job_id skips committed tiers (resume from checkpoint).
+tests).  Every tier write is range-laid-out on doc_id and sorted within
+partitions.  ``run()`` applies the range partitioning to the INPUT of each
+tier's Python UDF stage (the raw points, the filled base grid, or the stored
+base scan), where it satisfies the tier's grouping and is the only exchange
+after it: the range sampler reads cheap JVM-side input, so each tier's UDF
+runs once per commit.  Each tier is then recorded in the manifest with
+per-file row/byte metrics and a COMMIT record; a re-run of the same job_id
+skips committed tiers (resume from checkpoint).
 
 Timestamps are epoch seconds (int64) throughout the engine — integer window
 arithmetic (``ts - ts % step``) is exact, codegen-friendly, and avoids
@@ -38,6 +42,10 @@ from pyspark.sql import functions as F
 from tsfresh_spark.extract import compute_series_features
 from tsfresh_spark.functions.codec import encode_series
 from tsfresh_spark.plans.manifest import Manifest
+from tsfresh_spark.plans.partitioning import (
+    group_partition_count,
+    pin_group_partitions,
+)
 
 DAY = 86400
 
@@ -75,17 +83,41 @@ class RollupEngine:
     def tier_path(self, tier: str) -> str:
         return f"{self.base_path.rstrip('/')}/tier={tier}"
 
-    def _write(self, df: DataFrame, tier: str) -> str:
-        path = self.tier_path(tier)
+    def _range_layout(self, df: DataFrame, num_partitions: int | None = None) -> DataFrame:
+        """Range-partition a tier's input on doc_id.  The tier's grouping
+        and its Python UDF cluster on ``id_cols``, which this satisfies, so
+        it adds no exchange above the UDF and is also the stored layout; its
+        sampling job reads the cheap JVM-side input instead of re-running
+        the UDF.  ``None`` lets AQE coalesce the partitions."""
         doc_col = self.id_cols[0]
-        out = df
-        if self.range_partitions:
-            out = out.repartitionByRange(self.range_partitions, doc_col)
-        else:
-            out = out.repartitionByRange(doc_col)
-        out = out.sortWithinPartitions(doc_col, "window_start")
+        n = num_partitions or self.range_partitions
+        return df.repartitionByRange(n, doc_col) if n else df.repartitionByRange(doc_col)
+
+    def _write(self, df: DataFrame, tier: str) -> str:
+        """Persist a tier frame that is already range-laid-out on doc_id
+        (:meth:`_range_layout` on its input); sorting within partitions adds
+        no exchange."""
+        path = self.tier_path(tier)
+        out = df.sortWithinPartitions(self.id_cols[0], "window_start")
         out.write.mode("overwrite").parquet(path)
         return path
+
+    def _tier_schema(self, source: DataFrame) -> str:
+        """DDL of every tier frame: the id columns typed as in ``source``,
+        then the window, feature and payload columns."""
+        id_field_types = ", ".join(
+            f"{f.name} {f.dataType.simpleString()}"
+            for f in source.schema.fields
+            if f.name in self.id_cols
+        )
+        return (
+            f"{id_field_types}, window_start long, n_points long, "
+            "features map<string,double>, payload binary"
+        )
+
+    def _read_tier(self, tier: str, schema: str) -> DataFrame:
+        """A stored tier with its known schema: no schema-inference job."""
+        return self.spark.read.schema(schema).parquet(self.tier_path(tier))
 
     # ------------------------------------------------------- point shuttling
 
@@ -99,10 +131,6 @@ class RollupEngine:
         return bucketed.groupBy(*idc, "window_start").agg(
             F.array_sort(F.collect_list(F.struct("ts", "value"))).alias("pts")
         )
-
-    def _decode_tier_points(self, tier: str) -> DataFrame:
-        """Read a committed tier and decode its payloads back to points."""
-        return self.decode_points(self.spark.read.parquet(self.tier_path(tier)))
 
     def decode_points(self, stored: DataFrame) -> DataFrame:
         """Decode a tier frame's payload column back to (id..., ts, value)."""
@@ -129,8 +157,13 @@ class RollupEngine:
         chunks = self._chunk_points(points, DAY)
         return self._apply_chunks(chunks, with_features=False)
 
-    def _base_tier(self, points: DataFrame) -> DataFrame:
-        """gap-filled regular grid at base_step, stored per-day."""
+    def _base_tier(self, points: DataFrame, *, layout: bool = False) -> DataFrame:
+        """gap-filled regular grid at base_step, stored per-day.
+
+        ``layout=True`` range-partitions the filled grid, not the raw
+        points: the grid's left join would re-shuffle a range-partitioned
+        input (Spark never treats two range partitionings as co-partitioned).
+        """
         from tsfresh_spark.operators.gapfill import fill_forward, fill_linear, regularize
 
         idc = list(self.id_cols)
@@ -161,10 +194,12 @@ class RollupEngine:
         pts = filled.filter(F.col("value").isNotNull()).select(
             *idc, F.col("bucket").alias("ts"), "value"
         )
+        if layout:
+            pts = self._range_layout(pts)
         chunks = self._chunk_points(pts, DAY)
         return self._apply_chunks(chunks, with_features=False)
 
-    def _base_tier_compact(self, points: DataFrame) -> DataFrame:
+    def _base_tier_compact(self, points: DataFrame, *, layout: bool = False) -> DataFrame:
         """Single-shuffle base tier: one ``applyInPandas`` per series does
         bucket → grid → fill → day-chunk → encode in numpy.
 
@@ -173,21 +208,17 @@ class RollupEngine:
         (np.interp) and ffill is a forward index scan.  The window-function
         path remains the default/documented operator; this is the
         one-exchange physical alternative for very large fleets.
+
+        The grouping shuffle is pinned to a fixed partition count: by hash,
+        or with ``layout=True`` by range on doc_id (``range_partitions``
+        when set), so that it is also the stored layout.
         """
         idc = list(self.id_cols)
         step = self.base_step_seconds
         method = self.gap_method
         if method not in ("ffill", "linear"):
             raise ValueError(f"unsupported gap_method {method!r}")
-        id_field_types = ", ".join(
-            f"{f.name} {f.dataType.simpleString()}"
-            for f in points.schema.fields
-            if f.name in idc
-        )
-        schema = (
-            f"{id_field_types}, window_start long, n_points long, "
-            "features map<string,double>, payload binary"
-        )
+        schema = self._tier_schema(points)
 
         def per_series(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
             order = np.argsort(pdf["ts"].values, kind="mergesort")
@@ -237,11 +268,13 @@ class RollupEngine:
             ]
             return pd.DataFrame(rows)
 
-        from tsfresh_spark.plans.partitioning import pin_group_partitions
-
         # pin the grouping shuffle: AQE byte-coalescing would run this
         # compute-bound stage on 1-2 cores for small-byte inputs
-        pinned = pin_group_partitions(points, *idc)
+        if layout:
+            n = self.range_partitions or group_partition_count(self.spark)
+            pinned = self._range_layout(points, n)
+        else:
+            pinned = pin_group_partitions(points, *idc)
         return pinned.groupBy(*idc).applyInPandas(per_series, schema=schema)
 
     def _feature_tier(self, points: DataFrame, window_seconds: int) -> DataFrame:
@@ -274,15 +307,7 @@ class RollupEngine:
         idc = list(self.id_cols)
         kind_col = self.id_cols[1]
         settings = self.settings
-        id_field_types = ", ".join(
-            f"{f.name} {f.dataType.simpleString()}"
-            for f in stored.schema.fields
-            if f.name in idc
-        )
-        schema = (
-            f"{id_field_types}, window_start long, n_points long, "
-            "features map<string,double>, payload binary"
-        )
+        schema = self._tier_schema(stored)
 
         def run(batches):
             for pdf in batches:
@@ -359,15 +384,7 @@ class RollupEngine:
         idc = list(self.id_cols)
         settings = self.settings
         kind_col = self.id_cols[1]
-        id_field_types = ", ".join(
-            f"{f.name} {f.dataType.simpleString()}"
-            for f in chunks.schema.fields
-            if f.name in idc
-        )
-        schema = (
-            f"{id_field_types}, window_start long, n_points long, "
-            "features map<string,double>, payload binary"
-        )
+        schema = self._tier_schema(chunks)
 
         def run_batch(batches):
             for pdf in batches:
@@ -431,9 +448,13 @@ class RollupEngine:
         fs.delete(hpath, True)
         fs.rename(jvm.org.apache.hadoop.fs.Path(staging), hpath)
 
-        after = self.spark.read.parquet(path).count()
+        after = self.spark.read.schema(current.schema).parquet(path).count()
         self.manifest.record_tier(
-            job_id, tier, path, f"retention(cutoff={cutoff}) {before}->{after}"
+            job_id,
+            tier,
+            path,
+            f"retention(cutoff={cutoff}) {before}->{after}",
+            current.schema,
         )
         return {"tier": tier, "cutoff": cutoff, "before": before, "after": after}
 
@@ -448,6 +469,7 @@ class RollupEngine:
         """
         committed = self.manifest.committed_tiers(job_id)
         out: dict[str, str] = {}
+        tier_schema = self._tier_schema(raw_points)
 
         from tsfresh_spark.plans.profiling import StageProfiler
 
@@ -484,33 +506,45 @@ class RollupEngine:
                     )
                 except Exception:
                     pass
-            self.manifest.record_tier(job_id, name, self.tier_path(name), lineage)
+            self.manifest.record_tier(
+                job_id, name, self.tier_path(name), lineage, tier_schema
+            )
             out[name] = self.tier_path(name)
             return True
 
-        do_tier("raw", lambda: self._archive_tier(raw_points), "raw<-input")
+        # Each tier is range-laid-out on the input of its Python UDF stage,
+        # so the stored layout adds no exchange above the UDF and the range
+        # sampler never re-runs it: one UDF pass per commit.
+        do_tier(
+            "raw",
+            lambda: self._archive_tier(self._range_layout(raw_points)),
+            "raw<-input",
+        )
         base_fn = (
             self._base_tier_compact if self.base_impl == "compact" else self._base_tier
         )
         do_tier(
             "base",
-            lambda: base_fn(raw_points),
+            lambda: base_fn(raw_points, layout=True),
             f"base<-input(gapfill:{self.base_impl})",
         )
 
         for spec in self.tiers:
             if DAY % spec.window_seconds == 0:
-                # day-aligned windows: narrow payload split, zero shuffle
+                # day-aligned windows: narrow payload split of the
+                # range-laid-out base scan
                 def compute(spec=spec):
-                    stored = self.spark.read.parquet(self.tier_path("base"))
+                    stored = self._range_layout(self._read_tier("base", tier_schema))
                     return self._cascade_tier(stored, spec.window_seconds)
 
                 lineage = f"{spec.name}<-base(narrow-split)"
             else:
-                # wider-than-a-day windows: decode + regroup (one shuffle)
+                # wider-than-a-day windows: decode + regroup
                 def compute(spec=spec):
-                    pts = self._decode_tier_points("base")
-                    return self._feature_tier(pts, spec.window_seconds)
+                    pts = self.decode_points(self._read_tier("base", tier_schema))
+                    return self._feature_tier(
+                        self._range_layout(pts), spec.window_seconds
+                    )
 
                 lineage = f"{spec.name}<-base(decode+window)"
             do_tier(spec.name, compute, lineage)

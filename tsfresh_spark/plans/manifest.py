@@ -16,19 +16,27 @@ Manifest row schema (FIXTURES.md F6):
 resume criterion.  Data is written before its commit record (write-ahead on
 data), so a crash between the two leaves a re-runnable, never a corrupt,
 tier.
+
+A commit appends one file: the rows are built as a pandas frame and handed
+to the JVM through Arrow (no pickled-RDD round trip through a Python
+worker), and the tier is read back with its known schema (no
+schema-inference job).
 """
 
 from __future__ import annotations
 
-import datetime as dt
+import pandas as pd
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 MANIFEST_SCHEMA = (
     "job_id string, tier string, partition_id int, row_count long, "
     "byte_count long, committed_at timestamp, lineage string"
 )
+
+MANIFEST_COLUMNS = [c.split()[0] for c in MANIFEST_SCHEMA.split(", ")]
 
 COMMIT_PARTITION_ID = -1
 
@@ -95,22 +103,27 @@ class Manifest:
         return out
 
     def record_tier(
-        self, job_id: str, tier: str, data_path: str, lineage: str
+        self,
+        job_id: str,
+        tier: str,
+        data_path: str,
+        lineage: str,
+        schema: StructType | str,
     ) -> None:
         """Append per-file partition metrics + the tier COMMIT record.
 
-        Reads the written tier back (metadata-only count per file) so the
-        recorded row counts are what is actually on storage, not what the
-        writing job believed.
+        Reads the written tier back (metadata-only count per file, with the
+        tier's ``schema``) so the recorded row counts are what is actually
+        on storage, not what the writing job believed.
         """
-        written = self.spark.read.parquet(data_path)
+        written = self.spark.read.schema(schema).parquet(data_path)
         per_file = (
             written.groupBy(F.input_file_name().alias("file"))
             .count()
             .collect()
         )
         sizes = dict(self._file_stats(data_path))
-        now = dt.datetime.now(dt.timezone.utc).replace(tzinfo=None)
+        now = pd.Timestamp.now(tz="UTC")
         rows = [
             (
                 job_id,
@@ -137,7 +150,9 @@ class Manifest:
             )
         )
         (
-            self.spark.createDataFrame(rows, MANIFEST_SCHEMA)
+            self.spark.createDataFrame(
+                pd.DataFrame(rows, columns=MANIFEST_COLUMNS), MANIFEST_SCHEMA
+            )
             .coalesce(1)
             .write.mode("append")
             .parquet(self.path)

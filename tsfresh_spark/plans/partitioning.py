@@ -46,12 +46,17 @@ def pin_group_partitions(
     ``groupBy(keys).applyInPandas`` reuses the exchange (same hash
     distribution), so no extra shuffle is added."""
     if num_partitions is None:
-        sess = df.sparkSession
-        num_partitions = max(
-            int(sess.conf.get("spark.sql.shuffle.partitions", "200")),
-            sess.sparkContext.defaultParallelism * 2,
-        )
+        num_partitions = group_partition_count(df.sparkSession)
     return df.repartition(num_partitions, *keys)
+
+
+def group_partition_count(sess) -> int:
+    """The partition count :func:`pin_group_partitions` pins to by default:
+    enough tasks to keep every core busy on a compute-bound stage."""
+    return max(
+        int(sess.conf.get("spark.sql.shuffle.partitions", "200")),
+        sess.sparkContext.defaultParallelism * 2,
+    )
 
 
 def ensure_min_parallelism(df: DataFrame, factor: int = 2) -> DataFrame:
