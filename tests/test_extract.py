@@ -4,6 +4,8 @@ order-invariance contract from the reference's orchestration suite
 (/root/reference/tests/units/feature_extraction/test_extraction.py:207,292).
 """
 
+import itertools
+
 import numpy as np
 import pandas as pd
 import pytest
@@ -165,45 +167,57 @@ def test_kind_to_settings_routing(spark, tokens_df):
 
 
 def test_no_per_series_state_survives_extraction():
-    """Every module-level one-slot kernel cache (``_*_CACHE = [None]``) is
-    empty once ``compute_series_features`` has finished a series, so a
-    reused python worker pins nothing of the last series between jobs."""
+    """Per-series work is shared only through ``@per_series``: exactly four
+    memo slots are registered (rfft, Welch PSD, Chebyshev, Friedrich), the
+    comprehensive set fills all four, and all are empty once
+    ``compute_series_features`` has finished the series, so a reused python
+    worker pins nothing of the last series between jobs.  No kernel module
+    keeps a hand-rolled one-slot ``_*_CACHE = [None]`` global either."""
     import importlib
     import pkgutil
 
     import tsfresh_spark.kernels as kernels_pkg
     from tsfresh_spark.extract import compute_series_features
+    from tsfresh_spark.kernels.registry import _SERIES_SLOTS
 
-    x = np.random.RandomState(3).normal(size=300)
-    out = dict(compute_series_features(x, "web", comprehensive_settings()))
-    assert out
-    slots = {}
+    one_slot_globals = []
     for mod_info in pkgutil.iter_modules(kernels_pkg.__path__):
         mod = importlib.import_module(f"{kernels_pkg.__name__}.{mod_info.name}")
         for name, value in vars(mod).items():
             if name.endswith("_CACHE") and isinstance(value, list) and len(value) == 1:
-                slots[f"{mod_info.name}.{name}"] = value[0]
-    # the four shared per-series slots: rfft, Welch PSD, Chebyshev, Friedrich
-    assert len(slots) >= 4, sorted(slots)
-    assert {k: v for k, v in slots.items() if v is not None} == {}
+                one_slot_globals.append(f"{mod_info.name}.{name}")
+    assert one_slot_globals == []
+    assert len(_SERIES_SLOTS) == 4
+
+    x = np.random.RandomState(3).normal(size=300)
+    filled = 0
+    for _ in compute_series_features(x, "web", comprehensive_settings()):
+        filled = sum(slot[0] is not None for slot in _SERIES_SLOTS)
+    assert filled == 4  # every share was taken by the last feature
+    assert [slot[0] for slot in _SERIES_SLOTS] == [None] * 4
 
 
-def test_series_caches_key_on_dtype():
-    """Two series with the same bytes but different dtypes must not share
-    a cached rfft or Chebyshev matrix."""
-    from tsfresh_spark.kernels.entropy import _cheb_matrices, clear_cheb_cache
-    from tsfresh_spark.kernels.spectral import _rfft_cached, clear_rfft_cache
+def test_interleaved_extractions_match_sequential():
+    """compute_series_features is a generator, so two extractions can
+    interleave (and one can clear the memo mid-way through the other): each
+    must still yield exactly the features of running it alone."""
+    from tsfresh_spark.extract import compute_series_features
 
-    a = np.arange(1.0, 9.0)
-    b = a.view(np.int64)
-    try:
-        _rfft_cached(a)
-        np.testing.assert_array_equal(_rfft_cached(b), np.fft.rfft(b))
-        _cheb_matrices(a, [2])
-        got = _cheb_matrices(b, [2])[2]
-        want = np.abs(b[:, None] - b[None, :])
-        want = np.maximum(want[:-1, :-1], want[1:, 1:])
-        np.testing.assert_array_equal(got, want)
-    finally:
-        clear_cheb_cache()
-        clear_rfft_cache()
+    rng = np.random.RandomState(5)
+    a, b = rng.normal(size=(2, 300))
+    fc = comprehensive_settings()
+
+    def bits(pairs):
+        return [(name, np.float64(v).tobytes()) for name, v in pairs]
+
+    want = [bits(compute_series_features(x, "web", fc)) for x in (a, b)]
+    ga = compute_series_features(a, "web", fc)
+    gb = compute_series_features(b, "web", fc)
+    got_a = [next(ga) for _ in range(50)]  # a runs ahead and finishes first
+    got_b = []
+    for pa, pb in itertools.zip_longest(ga, gb):
+        if pa is not None:
+            got_a.append(pa)
+        if pb is not None:
+            got_b.append(pb)
+    assert [bits(got_a), bits(got_b)] == want

@@ -7,7 +7,10 @@ import math
 import numpy as np
 import pytest
 
+from tsfresh_spark.kernels import entropy, model, spectral
 from tsfresh_spark.kernels.helpers import (
+    _welch_psd_default,
+    _welch_psd_impl,
     acf_adjusted,
     betainc_reg,
     cwt_ricker,
@@ -18,6 +21,7 @@ from tsfresh_spark.kernels.helpers import (
     student_t_sf,
     welch_psd,
 )
+from tsfresh_spark.kernels.registry import _SERIES_SLOTS, clear_series_memo
 
 
 def test_acf_fft_equals_direct():
@@ -157,79 +161,103 @@ def test_welch_batched_rfft_bitequal_to_segment_loop():
         assert np.array_equal(welch_psd(odd, nperseg=31), welch_loop(odd, nperseg=31)), n
 
 
-def test_welch_psd_one_slot_cache_semantics():
-    """Round-6: default-parameter welch_psd memoizes one series deep so
-    fourier_entropy and spkt_welch_density share one PSD per series.  The
-    cache must return the identical array on a hit, never cross-contaminate
-    between series (interleaved calls), bypass for explicit nperseg, and
-    hand out read-only arrays so an accidental in-place consumer raises
+# the four @per_series builders, each as (memoized, fresh)
+_MEMO_BUILDERS = {
+    "rfft": (spectral._rfft_cached, np.fft.rfft),
+    "welch_psd": (
+        _welch_psd_default,
+        lambda x: _welch_psd_impl(x, min(len(x), 256)),
+    ),
+    "chebyshev": (
+        lambda x: entropy._cheb_matrices_shared(x, (2, 3)),
+        lambda x: entropy._cheb_matrices(x, (2, 3)),
+    ),
+    "friedrich": (
+        lambda x: model._friedrich_shared(x, 3, 30),
+        lambda x: model._friedrich_coefficients(x, 3, 30),
+    ),
+}
+
+
+def _assert_same_values(got, want):
+    if isinstance(want, dict):
+        assert got.keys() == want.keys()
+        for k in want:
+            np.testing.assert_array_equal(got[k], want[k])
+    else:
+        np.testing.assert_array_equal(got, want)
+
+
+@pytest.mark.parametrize("builder", list(_MEMO_BUILDERS))
+def test_per_series_memo_semantics(builder):
+    """fft_coefficient/fft_aggregated (rfft), fourier_entropy/
+    spkt_welch_density (Welch PSD), sample_entropy/approximate_entropy
+    (Chebyshev matrices) and friedrich_coefficients/max_langevin_fixed_point
+    (drift fit) share one result per series through ``@per_series``.  A hit
+    returns the identical object; interleaved series never cross-contaminate;
+    NaN and int series hit on equal bytes; same bytes under another dtype
+    miss; results are read-only, so an accidental in-place consumer raises
     instead of corrupting the slot."""
-    import numpy as np
-
-    from tsfresh_spark.kernels.helpers import (
-        _welch_psd_impl,
-        clear_psd_cache,
-        welch_psd,
-    )
-
+    memo, fresh = _MEMO_BUILDERS[builder]
     rng = np.random.RandomState(7)
-    clear_psd_cache()
-    a = rng.randn(300)
-    b = rng.randn(301)
-    pa = welch_psd(a)
-    assert welch_psd(a) is pa  # hit returns the identical object
-    pb = welch_psd(b)  # different series evicts, no contamination
-    assert np.array_equal(pb, _welch_psd_impl(np.asarray(b, float), 256))
-    assert np.array_equal(welch_psd(a), _welch_psd_impl(np.asarray(a, float), 256))
-    # NaN series: bytes-keyed compare must still hit (NaN != NaN as floats,
-    # but the key is a memcmp on the raw bytes)
-    c = a.copy()
-    c[5] = np.nan
-    pc = welch_psd(c)
-    assert welch_psd(c.copy()) is pc
-    # explicit nperseg bypasses the cache and is unaffected by it
-    assert np.array_equal(
-        welch_psd(a, nperseg=31), _welch_psd_impl(np.asarray(a, float), 31)
-    )
-    # cached arrays are read-only
+    clear_series_memo()
     try:
-        pa_again = welch_psd(a)
-        pa_again[0] = 1.0
-        raise AssertionError("cached PSD must be read-only")
-    except ValueError:
-        pass
-    clear_psd_cache()
-
-
-def test_rfft_one_slot_cache_semantics():
-    """Round-6: fft_coefficient / fft_aggregated share one rfft per series
-    through a bytes-keyed one-slot cache.  Hit returns the identical
-    object; different series never cross-contaminate; cached spectra are
-    read-only."""
-    import numpy as np
-
-    from tsfresh_spark.kernels.spectral import _rfft_cached, clear_rfft_cache
-
-    rng = np.random.RandomState(11)
-    clear_rfft_cache()
-    a = rng.randn(200)
-    b = rng.randn(200)
-    sa = _rfft_cached(a)
-    assert _rfft_cached(a) is sa
-    assert np.array_equal(sa, np.fft.rfft(a))
-    sb = _rfft_cached(b)
-    assert np.array_equal(sb, np.fft.rfft(b))
-    assert np.array_equal(_rfft_cached(a), np.fft.rfft(a))
-    # int series (tokens regime) hit on identical bytes too
-    t = rng.randint(0, 97, 50)
-    st = _rfft_cached(t)
-    assert _rfft_cached(t.copy()) is st
-    try:
-        _rfft_cached(t)[0] = 0
-        raise AssertionError("cached spectrum must be read-only")
-    except ValueError:
-        pass
-    clear_rfft_cache()
+        a = rng.randn(300)
+        b = rng.randn(300)
+        ra = memo(a)
+        assert memo(a) is ra and memo(a.copy()) is ra  # hit: identical object
+        _assert_same_values(ra, fresh(a))
+        rb = memo(b)  # a different series evicts, no contamination
+        assert rb is not ra
+        _assert_same_values(rb, fresh(b))
+        _assert_same_values(memo(a), fresh(a))
+        # NaN series: NaN != NaN as floats, but the key is a memcmp of bytes
+        c = a.copy()
+        c[5] = np.nan
+        rc = memo(c)
+        assert memo(c.copy()) is rc
+        # int series (tokens regime) hit on identical bytes too
+        t = rng.randint(0, 97, 50)
+        rt = memo(t)
+        assert memo(t.copy()) is rt
+        _assert_same_values(rt, fresh(t))
+        # same bytes, different dtype: a miss, never the other dtype's result
+        f = np.arange(1.0, 65.0)
+        i = f.view(np.int64)
+        rf = memo(f)
+        ri = memo(i)
+        assert ri is not rf
+        _assert_same_values(ri, fresh(i))
+        # results are read-only
+        for arr in ra.values() if isinstance(ra, dict) else (ra,):
+            with pytest.raises(ValueError):
+                arr[0] = 1.0
+        if builder == "welch_psd":
+            # explicit nperseg bypasses the memo and leaves it untouched
+            pa = welch_psd(a)
+            assert welch_psd(a) is pa
+            np.testing.assert_array_equal(
+                welch_psd(a, nperseg=31), _welch_psd_impl(a, 31)
+            )
+            assert welch_psd(a) is pa
+        if builder == "friedrich":
+            # the builder's extra arguments are part of the key
+            r3 = model._friedrich_shared(a, 3, 30)
+            np.testing.assert_array_equal(
+                model._friedrich_shared(a, 2, 30),
+                model._friedrich_coefficients(a, 2, 30),
+            )
+            assert model._friedrich_shared(a, 3, 30) is not r3
+        if builder == "chebyshev":
+            # the share is skipped above 2048 points (n=4096 would pin
+            # ~270 MB per worker); at 2048 it is taken
+            clear_series_memo()
+            entropy.sample_entropy(rng.randn(2049))
+            assert all(slot[0] is None for slot in _SERIES_SLOTS)
+            entropy.sample_entropy(rng.randn(2048))
+            assert any(slot[0] is not None for slot in _SERIES_SLOTS)
+    finally:
+        clear_series_memo()
 
 
 def test_linregress_arange_bitequal_to_general():

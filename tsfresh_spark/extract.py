@@ -33,6 +33,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from tsfresh_spark.kernels import KERNELS, KernelInfo
+from tsfresh_spark.kernels.registry import clear_series_memo
 from tsfresh_spark.naming import encode_parameters
 
 
@@ -149,22 +150,7 @@ def compute_series_features(
     try:
         yield from _run_plan(plan, values, timestamps, show_warnings)
     finally:
-        # sample_entropy/ApEn share Chebyshev matrices through a one-slot
-        # cache; once this series is done the slot would otherwise pin up to
-        # ~66 MB per reused python worker between jobs.  The Welch-PSD
-        # (fourier_entropy / spkt_welch_density) and rfft (fft_coefficient /
-        # fft_aggregated) one-slot shares are cleared for the same reason
-        # (they pin the series bytes as their keys), and so is the Friedrich
-        # drift fit (friedrich_coefficients / max_langevin_fixed_point).
-        from tsfresh_spark.kernels.entropy import clear_cheb_cache
-        from tsfresh_spark.kernels.helpers import clear_psd_cache
-        from tsfresh_spark.kernels.model import clear_friedrich_cache
-        from tsfresh_spark.kernels.spectral import clear_rfft_cache
-
-        clear_cheb_cache()
-        clear_psd_cache()
-        clear_friedrich_cache()
-        clear_rfft_cache()
+        clear_series_memo()
 
 
 def _run_plan(plan, values, timestamps, show_warnings):

@@ -10,7 +10,7 @@ from __future__ import annotations
 import numpy as np
 
 from tsfresh_spark.kernels.helpers import sliding_windows, welch_psd
-from tsfresh_spark.kernels.registry import kernel
+from tsfresh_spark.kernels.registry import kernel, per_series
 
 
 @kernel("binned_entropy", "simple")
@@ -28,34 +28,11 @@ def binned_entropy(x, max_bins):
 
 _CHEB_DENSE_LIMIT = 4096  # n beyond which the O(n²) dense matrices spill
 
-# one-slot cross-kernel cache: sample_entropy (m=2) and the
-# approximate_entropy grid (m=2) build the IDENTICAL width-{2,3} matrices
-# for the same series back-to-back inside one extraction plan — the dense
-# matrix construction is ~73% of the comprehensive-set runtime, so sharing
-# it halves that cost.  Keyed by the dtype and the raw series bytes (exact
-# memcmp, no hash collisions); bounded to the single most recent series per
-# worker.
-_CHEB_CACHE: list = [None]  # ((dtype_str, key_bytes), {width: matrix})
 
-
-def clear_cheb_cache() -> None:
-    """Release the cached matrices (up to ~66 MB for a 2048-point series).
-    Called by the extraction plan once a series' kernels have all run —
-    long-lived reused python workers must not pin the last series' matrices
-    between jobs."""
-    _CHEB_CACHE[0] = None
-
-
-def _cheb_matrices(x: np.ndarray, widths: list[int]):
+def _cheb_matrices(x: np.ndarray, widths: tuple[int, ...]):
     """Chebyshev window-distance matrices for each width, built as
     diagonal-shifted maxima of the single |x_i - x_j| base matrix — exact
     same values as the 3-D broadcast, ~m× less memory traffic."""
-    key = (x.dtype.str, x.tobytes())
-    cached = _CHEB_CACHE[0]
-    if cached is not None and cached[0] == key and all(
-        w in cached[1] for w in widths
-    ):
-        return {w: cached[1][w] for w in widths}
     # in-place abs: one fewer 8 MB temporary per series (abs is exact, so
     # values are bit-identical to the allocating form)
     D = np.subtract(x[:, None], x[None, :])
@@ -68,11 +45,16 @@ def _cheb_matrices(x: np.ndarray, widths: list[int]):
             out[w] = d
     if 1 in widths:
         out[1] = D
-    # cache only moderate series: n=2048 pins ~66 MB/worker (fine), n=4096
-    # would pin ~270 MB — not worth holding between series
-    if x.size <= 2048:
-        _CHEB_CACHE[0] = (key, out)
     return out
+
+
+# sample_entropy (m=2) and the approximate_entropy grid (m=2) build the
+# IDENTICAL width-{2,3} matrices for the same series back-to-back — the dense
+# construction is ~73% of the comprehensive-set runtime, so sharing it halves
+# that cost.  Shared only up to _CHEB_SHARE_LIMIT points: n=2048 pins ~66 MB
+# per worker (fine), n=4096 would pin ~270 MB.
+_cheb_matrices_shared = per_series(_cheb_matrices)
+_CHEB_SHARE_LIMIT = 2048
 
 
 @kernel("sample_entropy", "simple", high_comp_cost=True)
@@ -86,7 +68,8 @@ def sample_entropy(x):
     tol = 0.2 * np.std(x)
 
     if len(x) <= _CHEB_DENSE_LIMIT:
-        mats = _cheb_matrices(x, [m, m + 1])
+        share = len(x) <= _CHEB_SHARE_LIMIT
+        mats = (_cheb_matrices_shared if share else _cheb_matrices)(x, (m, m + 1))
         B = int((mats[m] <= tol).sum()) - mats[m].shape[0]
         A = int((mats[m + 1] <= tol).sum()) - mats[m + 1].shape[0]
     else:
@@ -159,7 +142,8 @@ def approximate_entropy_batch(x, param_list):
         raise ValueError("Parameter r must be positive.")
 
     if N <= _CHEB_DENSE_LIMIT:
-        mats = _cheb_matrices(x, [m, m + 1])
+        share = N <= _CHEB_SHARE_LIMIT
+        mats = (_cheb_matrices_shared if share else _cheb_matrices)(x, (m, m + 1))
 
         def _phis(mm):
             d = mats[mm]

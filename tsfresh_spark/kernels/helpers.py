@@ -10,10 +10,13 @@ the reference call it mirrors.
 
 from __future__ import annotations
 
+import functools
 import math
 from typing import NamedTuple
 
 import numpy as np
+
+from tsfresh_spark.kernels.registry import per_series
 
 
 def circular_shift(a: np.ndarray, shift: int) -> np.ndarray:
@@ -92,29 +95,21 @@ def chunked_aggregate(x, f_agg: str, chunk_len: int):
     return out
 
 
-_RICKER_CACHE: dict = {}
-_RICKER_CACHE_MAX = 256
-
-
+@functools.lru_cache(maxsize=256)
 def ricker_wavelet(points: int, a: float) -> np.ndarray:
     """Ricker ("mexican hat") wavelet, the classic normalized form.
 
     Same closed form as feature_calculators.py:1307-1316.  Deterministic in
     (points, a), so the vector is memoized per worker — the CWT kernels
     rebuild identical wavelets for every series (the cache is tiny: one
-    ≤10·width float vector per distinct (points, width))."""
-    key = (points, a)
-    w = _RICKER_CACHE.get(key)
-    if w is None:
-        A = 2 / (np.sqrt(3 * a) * (np.pi**0.25))
-        vec = np.arange(0, points) - (points - 1.0) / 2
-        xsq = vec**2
-        wsq = a**2
-        w = A * (1 - xsq / wsq) * np.exp(-xsq / (2 * wsq))
-        w.setflags(write=False)
-        if len(_RICKER_CACHE) >= _RICKER_CACHE_MAX:
-            _RICKER_CACHE.pop(next(iter(_RICKER_CACHE)))
-        _RICKER_CACHE[key] = w
+    ≤10·width float vector per distinct (points, width)).  Read-only, as
+    every caller shares it."""
+    A = 2 / (np.sqrt(3 * a) * (np.pi**0.25))
+    vec = np.arange(0, points) - (points - 1.0) / 2
+    xsq = vec**2
+    wsq = a**2
+    w = A * (1 - xsq / wsq) * np.exp(-xsq / (2 * wsq))
+    w.setflags(write=False)
     return w
 
 
@@ -346,40 +341,17 @@ def linregress_np(x, y, *, with_pvalue: bool = True) -> LinregressResult:
     )
 
 
-_HANN_CACHE: dict = {}
-_HANN_CACHE_MAX = 64
-
-
+@functools.lru_cache(maxsize=64)
 def hann_periodic(n: int) -> np.ndarray:
     """Periodic Hann window (the spectral-analysis form).  Deterministic in
     ``n`` — memoized per worker (Welch rebuilds the same ≤256-point window
-    for every series)."""
-    w = _HANN_CACHE.get(n)
-    if w is None:
-        if n == 1:
-            w = np.ones(1)
-        else:
-            w = 0.5 - 0.5 * np.cos(2.0 * np.pi * np.arange(n) / n)
-        w.setflags(write=False)
-        if len(_HANN_CACHE) >= _HANN_CACHE_MAX:
-            _HANN_CACHE.pop(next(iter(_HANN_CACHE)))
-        _HANN_CACHE[n] = w
+    for every series); read-only, as every caller shares it."""
+    if n == 1:
+        w = np.ones(1)
+    else:
+        w = 0.5 - 0.5 * np.cos(2.0 * np.pi * np.arange(n) / n)
+    w.setflags(write=False)
     return w
-
-
-# one-slot cross-kernel cache: fourier_entropy and spkt_welch_density both
-# evaluate the default-parameter Welch PSD of the SAME series inside one
-# extraction plan — the second call returns the first call's array (the
-# identical object, so sharing is bit-exact by construction).  Keyed by the
-# raw float64 series bytes (exact memcmp); cleared per series by
-# compute_series_features alongside the Chebyshev cache.
-_PSD_CACHE: list = [None]  # (key_bytes, pxx)
-
-
-def clear_psd_cache() -> None:
-    """Release the cached PSD (and its series-bytes key) so reused python
-    workers don't pin the last series between jobs."""
-    _PSD_CACHE[0] = None
 
 
 def welch_psd(x: np.ndarray, nperseg: int | None = None) -> np.ndarray:
@@ -392,25 +364,22 @@ def welch_psd(x: np.ndarray, nperseg: int | None = None) -> np.ndarray:
     ``min(len(x), 256)``.
 
     Default-parameter calls (``nperseg=None`` — the only form the kernels
-    use) are memoized one-deep per worker: the effective segment length is
-    then a function of the series alone, so the series bytes fully key the
-    result.  The cached array is returned read-only; consumers never
-    mutate it (they allocate — ``pxx / max`` — or only index).
+    use) go through the ``@per_series`` memo, so fourier_entropy and
+    spkt_welch_density share one read-only PSD per series; consumers never
+    mutate it (they allocate — ``pxx / max`` — or only index).  An explicit
+    ``nperseg`` always computes afresh.
     """
     x = np.asarray(x, dtype=float)
-    n = len(x)
-    if n == 0:
+    if len(x) == 0:
         return np.array([])
     if nperseg is None:
-        key = x.tobytes()
-        hit = _PSD_CACHE[0]
-        if hit is not None and hit[0] == key:
-            return hit[1]
-        pxx = _welch_psd_impl(x, min(n, 256))
-        pxx.setflags(write=False)
-        _PSD_CACHE[0] = (key, pxx)
-        return pxx
+        return _welch_psd_default(x)
     return _welch_psd_impl(x, nperseg)
+
+
+@per_series
+def _welch_psd_default(x: np.ndarray) -> np.ndarray:
+    return _welch_psd_impl(x, min(len(x), 256))
 
 
 def _welch_psd_impl(x: np.ndarray, nperseg: int) -> np.ndarray:

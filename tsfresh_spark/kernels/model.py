@@ -26,7 +26,7 @@ from tsfresh_spark.kernels.helpers import (
     ols_lstsq,
     sliding_windows,
 )
-from tsfresh_spark.kernels.registry import kernel
+from tsfresh_spark.kernels.registry import kernel, per_series
 
 
 @kernel("linear_trend", "combiner")
@@ -302,32 +302,6 @@ def augmented_dickey_fuller(x, param):
 # ------------------------------------------------------- Langevin / Friedrich
 
 
-# one-slot cross-kernel cache: friedrich_coefficients and
-# max_langevin_fixed_point both fit the drift polynomial for the same
-# (series, m, r) back-to-back inside one extraction plan — the qcut+polyfit
-# is the whole cost of both kernels, so sharing it halves the pair.  Keyed
-# by the raw series bytes (exact memcmp) + (m, r); bounded to the single
-# most recent fit (the stored value is just m+1 coefficients).
-_FRIEDRICH_CACHE: list = [None]  # (key_bytes, m, r, coeffs)
-
-
-def clear_friedrich_cache() -> None:
-    """Release the cached fit (and its series-bytes key) so reused python
-    workers don't pin the last series between jobs."""
-    _FRIEDRICH_CACHE[0] = None
-
-
-def _friedrich_coefficients_cached(x, m, r):
-    xa = np.asarray(x, dtype=float)
-    key = xa.tobytes()
-    hit = _FRIEDRICH_CACHE[0]
-    if hit is not None and hit[1] == m and hit[2] == r and hit[0] == key:
-        return hit[3]
-    coeffs = _friedrich_coefficients(xa, m, r)
-    _FRIEDRICH_CACHE[0] = (key, m, r, coeffs)
-    return coeffs
-
-
 def _friedrich_coefficients(x, m, r):
     """Polyfit of quantile-binned mean drift (feature_calculators.py:131-173).
 
@@ -388,6 +362,12 @@ def _friedrich_coefficients(x, m, r):
         return [np.nan] * (m + 1)
 
 
+# friedrich_coefficients and max_langevin_fixed_point both fit the drift
+# polynomial for the same (series, m, r) back-to-back, and the qcut+polyfit
+# is the whole cost of both kernels: one fit per series is shared
+_friedrich_shared = per_series(_friedrich_coefficients)
+
+
 @kernel("friedrich_coefficients", "combiner")
 def friedrich_coefficients(x, param):
     """Langevin drift polynomial coefficients, cached per (m, r)
@@ -399,7 +379,7 @@ def friedrich_coefficients(x, param):
         if coeff < 0:
             raise ValueError(f"coefficients must be positive or zero, found {coeff}")
         if (m, r) not in cache:
-            cache[(m, r)] = _friedrich_coefficients_cached(x, m, r)
+            cache[(m, r)] = _friedrich_shared(x, m, r)
         try:
             res[f"coeff_{coeff}__m_{m}__r_{r}"] = cache[(m, r)][coeff]
         except IndexError:
@@ -411,7 +391,7 @@ def friedrich_coefficients(x, param):
 def max_langevin_fixed_point(x, r, m):
     """Largest real root of the fitted drift polynomial
     (feature_calculators.py:2134-2167)."""
-    coeff = _friedrich_coefficients_cached(x, m, r)
+    coeff = _friedrich_shared(x, m, r)
     try:
         return np.max(np.real(np.roots(coeff)))
     except (np.linalg.LinAlgError, ValueError):

@@ -12,32 +12,13 @@ from __future__ import annotations
 import numpy as np
 
 from tsfresh_spark.kernels.helpers import cwt_ricker, welch_psd
-from tsfresh_spark.kernels.registry import kernel
+from tsfresh_spark.kernels.registry import kernel, per_series
 
 
-# one-slot cross-kernel cache: fft_coefficient and fft_aggregated both
-# take the rfft of the SAME series inside one extraction plan — the second
-# call reuses the first call's spectrum (the identical array object, so
-# sharing is bit-exact by construction).  Keyed by the dtype and the raw
-# series bytes; cleared per series by compute_series_features.
-_RFFT_CACHE: list = [None]  # ((dtype_str, key_bytes), spectrum)
-
-
-def clear_rfft_cache() -> None:
-    """Release the cached spectrum (and its series-bytes key)."""
-    _RFFT_CACHE[0] = None
-
-
+@per_series
 def _rfft_cached(x) -> np.ndarray:
-    arr = np.asarray(x)
-    key = (arr.dtype.str, arr.tobytes())
-    hit = _RFFT_CACHE[0]
-    if hit is not None and hit[0] == key:
-        return hit[1]
-    spec = np.fft.rfft(arr)
-    spec.setflags(write=False)
-    _RFFT_CACHE[0] = (key, spec)
-    return spec
+    """One rfft per series, shared by fft_coefficient and fft_aggregated."""
+    return np.fft.rfft(x)
 
 
 @kernel("fft_coefficient", "combiner")
